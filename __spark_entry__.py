@@ -43,10 +43,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # in D); every one has a green exact twin (minhash_neardup_oracle
 # staged right beside it, knn_lsh_oracle r12, knn_ivf_oracle r13,
 # simhash_poly_signature r13). Non-stagings (plan/results identical,
-# r11 _release precedent): the embedding_near_duplicates dot_impl
-# parameter (default native = the r15 expression verbatim) for
-# embedding_near_dup_blocked/pagerank_one_iter beyond their group-B
-# staging reasons, and the float64-direct batch coercion in
+# r11 _release precedent): the float64-direct batch coercion in
 # pq_encode_adc_arrow/argmin_euclidean_arrow (bit-identical for the
 # array<float> columns shipped) for pq_adc_topk/kmeans_two_iterations.
 _DRIVER_PRIORITY = [

@@ -22,20 +22,13 @@ from typing import Optional
 from pydantic import BaseModel, Field, field_validator, model_validator
 
 from ..functions.spatial import reproject_point, validate_lonlat
-
-DEFAULT_LIMIT = 5
-MIN_LIMIT = 1
-MAX_LIMIT = 10
+from ..plans.builder import DEFAULT_LIMIT, MAX_LIMIT, MIN_LIMIT
 
 
 class Point(BaseModel):
     longitude: float
     latitude: float
     epsg: int = 4326
-
-    def reproject(self, dst_epsg: int) -> "Point":
-        x, y = reproject_point(self.longitude, self.latitude, self.epsg, dst_epsg)
-        return Point(longitude=x, latitude=y, epsg=dst_epsg)
 
 
 class Point4326(Point):

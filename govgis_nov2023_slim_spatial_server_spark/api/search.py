@@ -5,7 +5,8 @@ SparkSession instead of per-request asyncpg connections (reference
 backend/app.py:19-25), DataFrame plan instead of a SQL string, ``collect()``
 (bounded by limit ≤ 10) instead of ``conn.fetch``; exceptions → in-band
 error (reference backend/app.py:49-53). The MCP markdownify pass (reference
-backend/mcp.py:12-20) is applied post-collect when requested.
+backend/mcp.py:12-20) lives only in ``api.mcp.gis_layer_search``; this
+service returns the stored strings as-is.
 """
 
 from __future__ import annotations
@@ -13,7 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..fixtures.embedder import Embedder
-from ..functions.text import html_to_markdown_str
 from ..plans.builder import SearchRequest, build_search_plan
 from .models import LayerResult, SearchResponse, SemanticSearchRequest
 
@@ -23,9 +23,7 @@ class SearchService:
         self.layers = layers
         self.embedder = embedder
 
-    def search(
-        self, request: SemanticSearchRequest, *, markdownify: bool = False
-    ) -> SearchResponse:
+    def search(self, request: SemanticSearchRequest) -> SearchResponse:
         try:
             qvec = self.embedder.embed_query(request.request_string)
             point = None
@@ -40,20 +38,10 @@ class SearchService:
                     skip=request.skip,
                     limit=request.limit,
                 ),
-                include_dist=False,
             )
             rows = plan.collect()
+            # LayerResult ignores the plan's extra "dist" column
             layers = [LayerResult.model_validate(r.asDict()) for r in rows]
-            if markdownify:
-                layers = [
-                    LayerResult(
-                        **{
-                            k: (html_to_markdown_str(v) if isinstance(v, str) else v)
-                            for k, v in layer.model_dump().items()
-                        }
-                    )
-                    for layer in layers
-                ]
             return SearchResponse(layers=layers)
         except Exception as e:  # in-band error contract
             return SearchResponse(error=str(e))

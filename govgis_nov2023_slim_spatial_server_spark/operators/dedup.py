@@ -348,28 +348,14 @@ def embedding_near_duplicates(
     emb_col: str = "embedding",
     threshold: float = 0.95,
     block_col: str | None = None,
-    dot_impl: str = "native",
 ) -> DataFrame:
     """Near-dups by embedding cosine similarity ≥ threshold (exact).
 
     ``block_col`` (e.g. an LSH bucket or a label) turns the self-join into a
     per-block join — the required move at scale; None means full N²/2 and is
     only for small corpora / oracle checks.
-
-    ``dot_impl``: "native" (default) evaluates the per-pair dot as the JVM
-    HOF fold; "arrow" routes it through the vectorized `pair_dot_arrow`
-    kernel (bit-identical — see its docstring; pinned by test_vector.py).
-    The arrow path was MEASURED AND REJECTED as the default in r16
-    (VERDICT r15 #3): at sf0.1 the label-blocked pair stage is ~200k
-    candidate pairs, and the kernel read 0.715 s vs 0.466 s native
-    (same-session min-of-4) — the Arrow boundary's 2×64-double-per-pair
-    transfer costs more than the 64 interpreted fold steps it replaces,
-    and the consumer entries' wall time is dominated by the CC iteration
-    loop, not this stage. The kernel stays available (and exactness-
-    pinned) for genuinely dot-bound shapes: wider embeddings or a pair
-    stage that survives blocking at much higher multiplicity.
     """
-    from ..functions.vector import dot, l2_norm, pair_dot_arrow
+    from ..functions.vector import dot, l2_norm
 
     df = ensure_min_partitions(df)
     # Per-ROW norm, hoisted out of the pair join (r15, guide §2.3):
@@ -390,12 +376,7 @@ def embedding_near_duplicates(
     if block_col is not None:
         cond = cond & (F.col("a.blk") == F.col("b.blk"))
     denom = F.col("a.nrm") * F.col("b.nrm")
-    pdot = (
-        pair_dot_arrow()(F.col("a.emb"), F.col("b.emb"))
-        if dot_impl == "arrow"
-        else dot(F.col("a.emb"), F.col("b.emb"))
-    )
-    cos = F.when(denom > 0, pdot / denom).otherwise(
+    cos = F.when(denom > 0, dot(F.col("a.emb"), F.col("b.emb")) / denom).otherwise(
         F.lit(None).cast("double")
     )
     return (

@@ -16,18 +16,17 @@ and Parquet row-group stats can skip whole files.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.spatial import (
     bbox_contains_point,
     make_point_intersects_udf,
-    reproject_point,
     validate_lonlat,
 )
-from ..functions.vector import cosine_distance, cosine_distance_pandas
+from ..functions.vector import cosine_distance
 from ..operators.topk import top_k
 from ..schemas import TEXT_FIELDS
 
@@ -39,17 +38,15 @@ class SearchRequest:
     """Engine-level request (API layer validates + coerces into this).
 
     Mirrors SemanticSearchRequest semantics (reference backend/
-    models.py:78-102): limit clamped to [1,10], skip ≥ 0, point normalized
-    to EPSG:4326.
+    models.py:78-102): limit clamped to [1,10], skip ≥ 0, point a valid
+    EPSG:4326 lon/lat (the API's Point4326 has already reprojected it).
     """
 
     query_vec: list[float]
     type_filter: list[str] | None = None
-    point: tuple[float, float] | None = None  # (lon, lat) any CRS
-    epsg: int = 4326
+    point: tuple[float, float] | None = None  # (lon, lat) in EPSG:4326
     skip: int = 0
     limit: int = DEFAULT_LIMIT
-    extra_predicates: list[Column] = field(default_factory=list)
 
     def __post_init__(self) -> None:
         if not (MIN_LIMIT <= self.limit <= MAX_LIMIT):
@@ -57,20 +54,10 @@ class SearchRequest:
         if self.skip < 0:
             raise ValueError("skip must be >= 0")
         if self.point is not None:
-            lon, lat = reproject_point(*self.point, self.epsg, 4326)
-            validate_lonlat(lon, lat)
-            self.point = (lon, lat)
-            self.epsg = 4326
+            validate_lonlat(*self.point)
 
 
-def build_search_plan(
-    layers: DataFrame,
-    request: SearchRequest,
-    *,
-    normalized: bool = True,
-    dist_impl: str = "native",
-    include_dist: bool = True,
-) -> DataFrame:
+def build_search_plan(layers: DataFrame, request: SearchRequest) -> DataFrame:
     """Compose O14–O19 into the flagship plan (SURVEY.md §2.2)."""
     df = layers
 
@@ -85,19 +72,14 @@ def build_search_plan(
         df = df.where(bbox_contains_point("bbox", lon, lat))
         df = df.where(make_point_intersects_udf(lon, lat)(F.col("geom_wkb")))
 
-    # O17: exact cosine distance ranking
-    if dist_impl == "pandas":
-        dist = cosine_distance_pandas("embeddings", request.query_vec)
-    else:
-        dist = cosine_distance("embeddings", request.query_vec, normalized=normalized)
-    df = df.withColumn("dist", dist)
-    for pred in request.extra_predicates:
-        df = df.where(pred)
+    # O17: exact cosine distance ranking (embeddings are L2-normalized)
+    df = df.withColumn(
+        "dist", cosine_distance("embeddings", request.query_vec, normalized=True)
+    )
 
     # O18: deterministic top-k + offset (id tie-break)
     order = [F.col("dist").asc(), F.col("id").asc()]
     df = top_k(df, order, k=request.limit, skip=request.skip)
 
     # O19: client projection — never returns embeddings/geom
-    out_cols = [*TEXT_FIELDS] + (["dist"] if include_dist else [])
-    return df.select(*out_cols)
+    return df.select(*TEXT_FIELDS, "dist")

@@ -83,10 +83,12 @@ def test_mcp_markdownify_tree():
 
 def test_mcp_tool_search(spark):
     svc = SearchService(make_layers_df(spark, n=60), FakeEmbedder(dim=64, seed=42))
-    resp = gis_layer_search(svc, SemanticSearchRequest(request_string="flood zone", limit=3))
+    req = SemanticSearchRequest(request_string="flood zone", limit=3)
+    resp = gis_layer_search(svc, req)
     assert resp.error is None
     assert len(resp.layers) == 3
     assert all("<p>" not in (l.description or "") for l in resp.layers)
+    assert [l.id for l in resp.layers] == [l.id for l in svc.search(req).layers]
 
 
 def test_non_native_epsg_point_error_shape():

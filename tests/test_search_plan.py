@@ -51,6 +51,8 @@ def test_limit_validation():
         SearchRequest(query_vec=[1.0], limit=0)
     with pytest.raises(ValueError):
         SearchRequest(query_vec=[1.0], skip=-1)
+    with pytest.raises(ValueError):
+        SearchRequest(query_vec=[1.0], point=(200.0, 0.0))
 
 
 def test_bbox_prune_before_udf(spark, layers, embedder):
@@ -104,10 +106,3 @@ def test_search_service_error_in_band(spark, embedder):
     svc = SearchService(bad, embedder)
     resp = svc.search(SemanticSearchRequest(request_string="x"))
     assert resp.error is not None and resp.layers is None
-
-
-def test_search_service_markdownify(spark, layers, embedder):
-    svc = SearchService(layers, embedder)
-    resp = svc.search(SemanticSearchRequest(request_string="soil", limit=10), markdownify=True)
-    assert resp.error is None
-    assert all("<p>" not in (l.description or "") for l in resp.layers)
