@@ -17,7 +17,7 @@ from ..functions.spatial import (
     bbox_contains_point,
     bboxes_overlap,
     make_box_wkb_udf,
-    make_point_intersects_udf,
+    make_points_in_polys_udf,
     make_polys_intersect_udf,
     make_reproject_udf,
 )
@@ -106,7 +106,7 @@ def spatial_point_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     lon, lat = -100.7, 28.2
     return (
         layers.where(bbox_contains_point("bbox", lon, lat))
-        .where(make_point_intersects_udf(lon, lat)(F.col("geom_wkb")))
+        .where(make_points_in_polys_udf()(F.col("geom_wkb"), F.lit(lon), F.lit(lat)))
         .select("c_custkey")
     )
 
@@ -418,8 +418,7 @@ def html_to_markdown_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_byte_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing: binary payload column + mapInPandas feature
-    extraction (deterministic fake decode; real decoder is a stubbed seam,
-    operators/multimodal.decode_image)."""
+    extraction (deterministic fake decode)."""
     d = _t(spark, sf_dir, "documents")
     return extract_byte_stats(with_binary_payload(d))
 
@@ -765,7 +764,7 @@ def _ring_bottomk_map(
     Exactness: every quantity is int64 (coordinates are mod-401/161
     lattice values, so dsq < 2^18); the bottom-k order is the single
     integer key ``dsq·2^44 + custkey`` — exactly the (dsq, custkey)
-    lexicographic tie-break, valid while custkey < 2^44 (asserted;
+    lexicographic tie-break, valid while 0 ≤ custkey < 2^44 (asserted;
     ~10^13, far above any TPC-H scale). -1 sentinels mark missing
     candidates (fewer facilities than k).
 
@@ -800,6 +799,7 @@ def _ring_bottomk_map(
     )
     if full is not None:
         assert int(full[2].max()) < (1 << 44), "custkey outgrew the enc"
+        assert int(full[2].min()) >= 0, "negative custkey breaks the enc"
     cache: dict = {}
 
     def _ring_arrays(cxy):

@@ -730,7 +730,7 @@ def similarity_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = similarity_join(
         probes, e, k=3, probe_id="probe_id", probe_emb="probe_emb",
-        corpus_id="vec_id", corpus_emb="embedding", normalized=False,
+        corpus_id="vec_id", corpus_emb="embedding",
     )
     return out.select("probe_id", "vec_id", rnd_nz("dist", 4).alias("dist"))
 

@@ -25,7 +25,6 @@ from __future__ import annotations
 
 import math
 import struct
-from collections.abc import Iterable
 
 import numpy as np
 import pandas as pd
@@ -720,16 +719,6 @@ def bbox_contains_point(bbox: Column | str, lon: float, lat: float) -> Column:
     )
 
 
-def make_point_intersects_udf(lon: float, lat: float):
-    """Exact refinement: ST_Intersects(geom, point) as an Arrow-batched UDF."""
-
-    @pandas_udf(BooleanType())
-    def _intersects(wkbs: pd.Series) -> pd.Series:
-        return wkbs.apply(lambda w: point_in_polygon_wkb(w, lon, lat))
-
-    return _intersects
-
-
 def make_polys_intersect_udf():
     """Exact refinement for polygon×polygon joins: Arrow-batched pandas
     UDF over TWO WKB columns. Runs after the coarse bbox/grid join, so
@@ -885,13 +874,6 @@ def validate_lonlat(lon: float, lat: float) -> None:
         raise ValueError(f"longitude {lon} out of range [-180, 180]")
     if not (-90.0 <= lat <= 90.0):
         raise ValueError(f"latitude {lat} out of range [-90, 90]")
-
-
-Point = tuple[float, float]
-
-
-def iter_flat(points: Iterable[Point]) -> list[float]:
-    return [c for p in points for c in p]
 
 
 # ---------------------------------------------------------------------------
@@ -1619,25 +1601,22 @@ def boundary_fragments_batch(edges, comps):
 
 def holed_boundary_rows_batch(axv, ayv, rav, dav, sav, bxv, byv, rbv,
                               dbv, sbv):
-    """Fully VECTORIZED form of the holed-boundary kernel (r15
-    optimization round): ten int64 parameter vectors in, the positive
-    pairs' complete exact boundaries out as flat COO arrays —
-    ``(ri, fx1, fy1, fx2, fy2, a4, t8)`` where ``ri`` indexes the batch
-    and ``a4``/``t8`` are per-FRAGMENT copies of the pair's area_e4 and
-    turning8 (ready to emit as rows).
+    """Fully VECTORIZED holed-boundary kernel: ten int64 parameter
+    vectors in, the positive pairs' complete exact boundaries out as flat
+    COO arrays — ``(ri, fx1, fy1, fx2, fy2, a4, t8)`` where ``ri``
+    indexes the batch and ``a4``/``t8`` are per-FRAGMENT copies of the
+    pair's area_e4 and turning8 (ready to emit as rows).
 
-    Replaces the per-positive-pair Python chaining loop of
-    ``make_holed_boundary_udf`` (dict-based successor walks over tuple
-    lists ran per pair ≈ the entry's dominant cost at bench scale).
-    The loud structural asserts carry over, vectorized:
+    Loud structural asserts, vectorized:
     - every fragment start is UNIQUE per pair (vertex degree ≤ 2) and
       every fragment end matches exactly one start (degree ≥ 2) — so
       the successor map is a permutation and every chain closes;
     - cycles are labeled by pointer-doubling over the successor map and
       every ring's exterior turning must be exactly ±8 (Hopf
       Umlaufsatz), with ``turning8`` the per-pair sum.
-    Fragment values are bit-identical to the scalar path (pinned by the
-    entry's oracle and the Fraction property tests)."""
+    Fragment values are bit-identical to the scalar
+    ``chain_boundary_rings`` path (pinned by the entry's oracle and the
+    Fraction property tests)."""
     n = len(axv)
     edges_a, comps_a = _donut_geom_np(axv, ayv, rav, dav, sav == 1)
     edges_b, comps_b = _donut_geom_np(bxv, byv, rbv, dbv, sbv == 1)
@@ -1705,133 +1684,25 @@ def holed_boundary_rows_batch(axv, ayv, rav, dav, sav, bxv, byv, rbv,
     return ri, fx1, fy1, fx2, fy2, area8[ri] * 1250, t8[ri]
 
 
-def make_holed_boundary_udf():
-    """Boundary-reconstruction kernel for the holed clip family: store
-    PARAMS in (ten scalar int64 columns — the polygons never cross
-    Arrow), ``struct(area_e4, turning8, segs)`` out, where ``segs`` is
-    the complete exact ×2-scaled directed boundary of A∩B
-    (interior-left; fragments of ∂A inside B plus ∂B inside A via the
-    1D coverage sweep) and
-
-    - ``area_e4`` derives from the BOUNDARY's shoelace sum — the graded
-      cross-check against the oracle's nine-term Green area, two
-      genuinely different exact algorithms;
-    - ``turning8`` is the total exterior turning in 45° units (Hopf
-      Umlaufsatz): 8·(#CCW rings − #CW hole rings), the topological
-      invariant that grades ring structure without shipping ring ids.
-
-    Ring chaining itself runs here too (successor following — general
-    position makes every boundary vertex degree 2) purely as a loud
-    per-pair ASSERT: every chain closes, every ring turns ±8, and the
-    per-ring turning sum equals ``turning8``."""
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("area_e4", LongType(), True),
-            StructField("turning8", LongType(), True),
-            StructField(
-                "segs",
-                ArrayType(
-                    StructType(
-                        [
-                            StructField("x1_2", LongType(), True),
-                            StructField("y1_2", LongType(), True),
-                            StructField("x2_2", LongType(), True),
-                            StructField("y2_2", LongType(), True),
-                        ]
-                    )
-                ),
-                True,
-            ),
-        ]
-    )
-
-    @pandas_udf(schema)
-    def _boundary(
-        ax: pd.Series, ay: pd.Series, ra: pd.Series, da: pd.Series,
-        sa: pd.Series, bx: pd.Series, by: pd.Series, rb: pd.Series,
-        db: pd.Series, sb: pd.Series,
-    ) -> pd.DataFrame:
-        n = len(ax)
-        if not n:
-            return pd.DataFrame(
-                {
-                    "area_e4": np.zeros(0, dtype=np.int64),
-                    "turning8": np.zeros(0, dtype=np.int64),
-                    "segs": pd.Series([], dtype="object"),
-                }
-            )
-        a4 = np.zeros(n, dtype=np.int64)
-        t8 = np.zeros(n, dtype=np.int64)
-        segs_out: list = [[] for _ in range(n)]
-        cols = [
-            c.to_numpy().astype(np.int64)
-            for c in (ax, ay, ra, da, sa, bx, by, rb, db, sb)
-        ]
-        axv, ayv, rav, dav, sav, bxv, byv, rbv, dbv, sbv = cols
-        edges_a, comps_a = _donut_geom_np(axv, ayv, rav, dav, sav == 1)
-        edges_b, comps_b = _donut_geom_np(bxv, byv, rbv, dbv, sbv == 1)
-        ri_a, x1a, y1a, x2a, y2a = boundary_fragments_batch(edges_a, comps_b)
-        ri_b, x1b, y1b, x2b, y2b = boundary_fragments_batch(edges_b, comps_a)
-        ri = np.concatenate([ri_a, ri_b])
-        fx1 = np.concatenate([x1a, x1b])
-        fy1 = np.concatenate([y1a, y1b])
-        fx2 = np.concatenate([x2a, x2b])
-        fy2 = np.concatenate([y2a, y2b])
-        area8 = np.zeros(n, dtype=np.int64)
-        np.add.at(area8, ri, fx1 * fy2 - fy1 * fx2)
-        order = np.argsort(ri, kind="stable")
-        ri_s = ri[order]
-        fx1, fy1 = fx1[order], fy1[order]
-        fx2, fy2 = fx2[order], fy2[order]
-        for i in np.nonzero(area8 > 0)[0]:
-            lo = np.searchsorted(ri_s, i, "left")
-            hi = np.searchsorted(ri_s, i, "right")
-            frags = [
-                (int(fx1[k]), int(fy1[k]), int(fx2[k]), int(fy2[k]))
-                for k in range(lo, hi)
-            ]
-            # chaining as a loud per-pair ASSERT of general position +
-            # the Umlaufsatz (each ring turns exactly +-8)
-            _, a8, turning8 = chain_boundary_rings(frags)
-            if a8 != area8[i]:
-                raise ValueError("fragment area bookkeeping diverged")
-            a4[i] = a8 * 1250
-            t8[i] = turning8
-            segs_out[i] = [
-                {"x1_2": f[0], "y1_2": f[1], "x2_2": f[2], "y2_2": f[3]}
-                for f in frags
-            ]
-        return pd.DataFrame({"area_e4": a4, "turning8": t8, "segs": segs_out})
-
-    return _boundary.asNondeterministic()
-
-
 def clip_ring_rows_batch(ax, ay, bx, by):
     """Fully VECTORIZED ring assembly for the convex clip geometry-output
-    entry (r15 optimization round): subject/clip vertex matrices in
-    ((n, 8) / (n, 4) int64), the intersection rings out as flat COO
-    arrays — ``(pos, ae4, ri, v_idx, vx, vy)`` where ``pos`` masks the
-    positive pairs of the batch, ``ae4`` is area·10⁴ per positive pair,
-    and ``ri`` indexes the positive subset in order.
+    entry: subject/clip vertex matrices in ((n, 8) / (n, 4) int64), the
+    intersection rings out as flat COO arrays —
+    ``(pos, ae4, ri, v_idx, vx, vy)`` where ``pos`` masks the positive
+    pairs of the batch, ``ae4`` is area·10⁴ per positive pair, and
+    ``ri`` indexes the positive subset in order.
 
-    Replaces the per-positive-pair Python loop of the original
-    ``make_convex_clip_ring_udf`` (sort + tuple building + list
-    comprehensions ran 251k times per sf0.1 call ≈ the whole entry's
-    cost): the direction-class sort is one argsort over the 12 piece
-    slots per row (invalid pieces keyed 8 > any valid class, so valid
-    pieces land at the front in class order), and BOTH loud self-checks
-    carry over vectorized — strict class increase (two pieces sharing a
-    class would be collinear, excluded by the store congruence scheme)
-    and full chain closure including the wrap-around. Output values are
-    bit-identical to the loop (pinned by the entry's oracle and the
-    cyclic-equality property test)."""
+    The pieces (each subject's edges clipped to the other polygon,
+    ``_clip_param_core`` both directions) ARE the boundary of A∩B for
+    convex×convex, and a CCW convex ring's directed edge directions are
+    strictly increasing, so sorting the pieces by direction class IS the
+    ring. The sort is one argsort over the 12 piece slots per row
+    (invalid pieces keyed 8 > any valid class, so valid pieces land at
+    the front in class order), and two loud self-checks run vectorized —
+    strict class increase (two pieces sharing a class would be collinear,
+    excluded by the store congruence scheme) and full chain closure
+    including the wrap-around. Output values are pinned by the entry's
+    oracle and the cyclic-equality property test."""
     va, ax1, ay1, ax2, ay2 = _clip_param_core(ax, ay, bx, by)
     vb, bx1, by1, bx2, by2 = _clip_param_core(bx, by, ax, ay)
     V = np.concatenate([va, vb], axis=1)
@@ -1885,95 +1756,3 @@ def clip_ring_rows_batch(ax, ay, bx, by):
         raise ValueError("clip ring does not close")
     ri, ci = np.nonzero(Vs)
     return pos, ae4, ri, ci + 1, X1s[Vs], Y1s[Vs]
-
-
-def make_convex_clip_ring_udf():
-    """Geometry-OUTPUT form of the snap-free convex clip: per candidate
-    pair, reconstruct THE intersection ring from the exact boundary
-    pieces — ``struct(area_e4, vxs, vys)`` with the ×2-scaled CCW ring
-    vertices in canonical order. The pieces (each subject's edges
-    clipped to the other polygon, `_clip_param_core` both directions)
-    ARE the boundary of A∩B for convex×convex; ordering them needs no
-    chaining search: a CCW convex ring's directed edge directions are
-    strictly increasing, so two distinct edges can never share a
-    direction class (they would be collinear — excluded by the store's
-    congruence scheme), and SORTING the segments by direction class,
-    rotated to start at the lowest class present, IS the ring. The
-    assembly asserts chain closure (every sorted segment ends exactly
-    where the next begins) on every positive pair — a loud self-check
-    of both the convexity argument and the kernel, per row. Area is
-    computed vectorized first so only positive pairs pay the Python
-    list assembly."""
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("area_e4", LongType(), True),
-            StructField("vxs", ArrayType(LongType()), True),
-            StructField("vys", ArrayType(LongType()), True),
-        ]
-    )
-
-    @pandas_udf(schema)
-    def _ring(
-        axs: pd.Series, ays: pd.Series, bxs: pd.Series, bys: pd.Series
-    ) -> pd.DataFrame:
-        if not len(axs):
-            return pd.DataFrame(
-                {
-                    "area_e4": np.zeros(0, dtype=np.int64),
-                    "vxs": pd.Series([], dtype="object"),
-                    "vys": pd.Series([], dtype="object"),
-                }
-            )
-
-        def _mat(col: pd.Series) -> np.ndarray:
-            flat = np.concatenate(col.to_numpy()).astype(np.int64, copy=False)
-            return flat.reshape(len(col), -1)
-
-        ax, ay, bx, by = _mat(axs), _mat(ays), _mat(bxs), _mat(bys)
-        va, ax1, ay1, ax2, ay2 = _clip_param_core(ax, ay, bx, by)
-        vb, bx1, by1, bx2, by2 = _clip_param_core(bx, by, ax, ay)
-        tot = (
-            np.where(va, ax1 * ay2 - ay1 * ax2, 0).sum(axis=1)
-            + np.where(vb, bx1 * by2 - by1 * bx2, 0).sum(axis=1)
-        )  # = 8 · area
-        pos = tot > 0
-        ae4 = np.where(pos, tot * 1250, 0)
-        vxs_out: list = [None] * len(ax)
-        vys_out: list = [None] * len(ax)
-        for i in np.nonzero(pos)[0]:
-            segs = [
-                (int(ax1[i, j]), int(ay1[i, j]), int(ax2[i, j]), int(ay2[i, j]))
-                for j in np.nonzero(va[i])[0]
-            ] + [
-                (int(bx1[i, j]), int(by1[i, j]), int(bx2[i, j]), int(by2[i, j]))
-                for j in np.nonzero(vb[i])[0]
-            ]
-            segs.sort(
-                key=lambda s: _dir_class(s[2] - s[0], s[3] - s[1])
-            )
-            for k in range(len(segs)):
-                nxt = segs[(k + 1) % len(segs)]
-                if (segs[k][2], segs[k][3]) != (nxt[0], nxt[1]):
-                    raise ValueError(
-                        "clip ring does not chain — convexity/general-"
-                        f"position violated at row {i}: {segs}"
-                    )
-            vxs_out[i] = [s[0] for s in segs]
-            vys_out[i] = [s[1] for s in segs]
-        rows = ~pos
-        for i in np.nonzero(rows)[0]:
-            vxs_out[i] = []
-            vys_out[i] = []
-        return pd.DataFrame(
-            {"area_e4": ae4, "vxs": vxs_out, "vys": vys_out}
-        )
-
-    # same one-evaluation pin as the stats kernel
-    return _ring.asNondeterministic()

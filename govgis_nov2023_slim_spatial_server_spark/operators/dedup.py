@@ -19,20 +19,12 @@ from ..functions.hashes import (
     hamming64,
     jaccard,
     lsh_band_keys,
-    minhash_signature,
     simhash_band,
     simhash_udf,
     word_shingles,
 )
 from ..functions.text import fingerprint_udf
-from ..functions.vector import cosine_similarity
 from ..session import coalesce_materialized, ensure_min_partitions
-
-
-def exact_dedup(df: DataFrame, subset: list[str]) -> DataFrame:
-    """Reference O2 parity: hash-shuffle on the key columns, first-wins
-    (nondeterministic in both engines)."""
-    return df.dropDuplicates(subset)
 
 
 def exact_dedup_deterministic(
@@ -61,55 +53,6 @@ def fingerprint_dup_groups(
             F.min(id_col).alias("keep_id"),
         )
         .where(F.col("n_docs") > 1)
-    )
-
-
-def minhash_lsh_candidates(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_k: int = 3,
-    num_perm: int = 64,
-    bands: int = 16,
-    seed: int = 42,
-    materialize: bool = True,
-) -> DataFrame:
-    """Candidate near-dup pairs via MinHash-LSH banding.
-
-    shingle → signature (native exprs, no shuffle) → explode band keys →
-    self-join on (band, key) → distinct pairs. The explode multiplies rows
-    by `bands`, but each carries only (id, band, key) — 20 bytes — so the
-    bucket shuffle is tiny relative to the corpus.
-
-    ``materialize`` localCheckpoints the signature table so the self-join
-    scans it once instead of recomputing shingling+hashing per branch
-    (signatures are 8·num_perm bytes/doc — tiny next to the text). At
-    production scale the equivalent move is writing signatures to a table
-    and joining that.
-    """
-    rows = num_perm // bands
-    sigs = ensure_min_partitions(df).select(
-        F.col(id_col).alias("id"),
-        minhash_signature(
-            word_shingles(text_col, shingle_k), num_perm=num_perm, seed=seed
-        ).alias("sig"),
-    )
-    if materialize:
-        sigs = sigs.localCheckpoint(eager=False)
-    buckets = sigs.select(
-        "id", F.explode(lsh_band_keys(F.col("sig"), bands, rows)).alias("bk")
-    ).select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
     )
 
 

@@ -29,13 +29,12 @@ def knn(
     emb_col: str = "embedding",
     id_col: str = "vec_id",
     normalized: bool = False,
-    dist_name: str = "dist",
 ) -> DataFrame:
     """Top-k rows by cosine distance to ``query_vec``; deterministic via the
     ``id_col`` tie-break (SURVEY.md §7 hard part (b))."""
     return (
-        df.withColumn(dist_name, cosine_distance(emb_col, query_vec, normalized=normalized))
-        .orderBy(F.col(dist_name).asc(), F.col(id_col).asc())
+        df.withColumn("dist", cosine_distance(emb_col, query_vec, normalized=normalized))
+        .orderBy(F.col("dist").asc(), F.col(id_col).asc())
         .limit(k)
     )
 
@@ -87,46 +86,36 @@ def similarity_join(
     probe_emb: str = "probe_emb",
     corpus_id: str = "vec_id",
     corpus_emb: str = "embedding",
-    normalized: bool = False,
-    dist_name: str = "dist",
-    local_prune: bool = True,
 ) -> DataFrame:
     """For every probe row, the k nearest corpus rows (exact).
 
     probes is broadcast (must be the small side). Physical shape:
     map-side cross product → per-(partition, probe) local top-k
     (``local_topk_prune``) → one per-probe ``row_number`` window whose
-    shuffle carries ≤ P·k·n_probes rows, NOT |corpus|×|probes|. With
-    ``local_prune=False`` the full distance set shuffles into the window —
-    only sensible for debugging or when k ≈ |corpus|/P.
+    shuffle carries ≤ P·k·n_probes rows, NOT |corpus|×|probes|.
 
     Output: all probe + corpus columns EXCEPT the two embedding columns
-    (dropped once the distance is computed), plus ``dist_name``.
+    (dropped once the distance is computed), plus ``dist``.
     """
     from ..functions.vector import dot, l2_norm
 
-    if normalized:
-        joined = corpus.crossJoin(F.broadcast(probes))
-        dist = cosine_distance(corpus_emb, probe_emb, normalized=True)
-    else:
-        # precompute each side's norm ONCE per row before the join — the
-        # per-pair work drops from 3 array folds (dot + 2 norms) to 1
-        corpus = corpus.withColumn("__cnorm", l2_norm(corpus_emb))
-        probes = probes.withColumn("__pnorm", l2_norm(probe_emb))
-        joined = corpus.crossJoin(F.broadcast(probes))
-        dist = F.lit(1.0) - dot(corpus_emb, probe_emb) / (
-            F.col("__cnorm") * F.col("__pnorm")
-        )
+    # precompute each side's norm ONCE per row before the join — the
+    # per-pair work drops from 3 array folds (dot + 2 norms) to 1
+    corpus = corpus.withColumn("__cnorm", l2_norm(corpus_emb))
+    probes = probes.withColumn("__pnorm", l2_norm(probe_emb))
+    joined = corpus.crossJoin(F.broadcast(probes))
+    dist = F.lit(1.0) - dot(corpus_emb, probe_emb) / (
+        F.col("__cnorm") * F.col("__pnorm")
+    )
     # embeddings are dead weight once dist is computed: dropping them keeps
     # wide arrays out of the prune's Arrow batches and the window's shuffle
-    scored = joined.withColumn(dist_name, dist).drop(
+    scored = joined.withColumn("dist", dist).drop(
         "__cnorm", "__pnorm", probe_emb, corpus_emb
     )
-    if local_prune:
-        scored = local_topk_prune(scored, k, probe_id, dist_name, corpus_id)
+    scored = local_topk_prune(scored, k, probe_id, "dist", corpus_id)
     w = (
         Window.partitionBy(probe_id)
-        .orderBy(F.col(dist_name).asc(), F.col(corpus_id).asc())
+        .orderBy(F.col("dist").asc(), F.col(corpus_id).asc())
     )
     return (
         scored.withColumn("__rn", F.row_number().over(w))
@@ -233,7 +222,6 @@ def similarity_join_lsh(
     n_probes: int = 2,
     seed: int = 42,
     dim: int | None = None,
-    dist_name: str = "dist",
 ) -> DataFrame:
     """Approximate similarity join for LARGE probe sets.
 
@@ -261,13 +249,13 @@ def similarity_join_lsh(
     )
     joined = probes_b.join(corpus_b, "__bucket")
     dist = cosine_distance(corpus_emb, F.col(probe_emb), normalized=False)
-    scored = joined.withColumn(dist_name, dist).drop(
+    scored = joined.withColumn("dist", dist).drop(
         "__bucket", probe_emb, corpus_emb
     )
     # same map-side combine as the exact join: the bucket join's output
     # partitions prune to ≤ k rows per probe before the global window
-    scored = local_topk_prune(scored, k, probe_id, dist_name, corpus_id)
-    w = Window.partitionBy(probe_id).orderBy(F.col(dist_name).asc(), F.col(corpus_id).asc())
+    scored = local_topk_prune(scored, k, probe_id, "dist", corpus_id)
+    w = Window.partitionBy(probe_id).orderBy(F.col("dist").asc(), F.col(corpus_id).asc())
     return (
         scored.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") <= k)

@@ -7,8 +7,7 @@ decode / feature-extract / resize / frame-sample run as Arrow-batched
 ``mapInPandas`` so each Python worker streams record batches instead of
 materializing partitions.
 
-The actual image/audio decoders are NOT available in this environment, so
-``decode_image`` is an explicitly stubbed seam (NotImplementedError) while
+The actual image/audio decoders are NOT available in this environment;
 the Spark-side plumbing — schema, batch iteration, binary handling — is
 real and tested via ``extract_byte_stats`` (deterministic byte-level
 "features" with an arithmetic SQL oracle).
@@ -115,18 +114,6 @@ def sample_frames(
     return df.mapInPandas(gen, schema=FRAME_SCHEMA)
 
 
-def decode_image(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Real image decode — requires an imaging library absent from this
-    environment. The seam exists so production swaps in a decoder without
-    touching the pipeline shape (same mapInPandas contract as
-    extract_byte_stats)."""
-    raise NotImplementedError(
-        "image decoding requires an imaging library (e.g. Pillow) not "
-        "installed in this environment; use extract_byte_stats for the "
-        "plumbing-verified path"
-    )
-
-
 AUDIO_WINDOW_SCHEMA = (
     "doc_id bigint, window_idx bigint, n_samples bigint, sum_amp bigint, peak bigint"
 )
@@ -138,9 +125,9 @@ def audio_window_stats(
     """Fixed-size sample-window statistics over binary payloads — the
     audio-feature fan-out shape (per-window RMS/peak for VAD, silence
     trimming, loudness normalization). The payload bytes stand in for
-    PCM samples (the real codec is the same stubbed seam as decode_image);
-    the numpy slicing, window fan-out (one input row → n_windows output
-    rows), and exact integer aggregates are the production plumbing.
+    PCM samples (no audio codec is decoded); the numpy slicing, window
+    fan-out (one input row → n_windows output rows), and exact integer
+    aggregates are the production plumbing.
     """
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

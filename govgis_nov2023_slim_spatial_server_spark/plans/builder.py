@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions.spatial import (
     bbox_contains_point,
-    make_point_intersects_udf,
+    make_points_in_polys_udf,
     validate_lonlat,
 )
 from ..functions.vector import cosine_distance
@@ -70,7 +70,9 @@ def build_search_plan(layers: DataFrame, request: SearchRequest) -> DataFrame:
     if request.point is not None:
         lon, lat = request.point
         df = df.where(bbox_contains_point("bbox", lon, lat))
-        df = df.where(make_point_intersects_udf(lon, lat)(F.col("geom_wkb")))
+        df = df.where(
+            make_points_in_polys_udf()(F.col("geom_wkb"), F.lit(lon), F.lit(lat))
+        )
 
     # O17: exact cosine distance ranking (embeddings are L2-normalized)
     df = df.withColumn(

@@ -4,7 +4,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from govgis_nov2023_slim_spatial_server_spark.operators.multimodal import (
-    decode_image,
     extract_byte_stats,
     with_binary_payload,
 )
@@ -79,12 +78,6 @@ def test_multimodal_byte_stats(spark):
     got = {r["doc_id"]: r for r in out}
     assert got[1]["n_bytes"] == 3 and got[1]["first_byte"] == ord("a")
     assert got[2]["n_bytes"] == 5 and got[2]["width"] == 5 and got[2]["height"] == 35
-
-
-def test_decode_image_is_stubbed(spark):
-    df = spark.createDataFrame([(1, b"notanimage")], "id: long, payload: binary")
-    with pytest.raises(NotImplementedError):
-        decode_image(df)
 
 
 def test_multimodal_resize(spark):

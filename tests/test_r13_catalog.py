@@ -180,6 +180,18 @@ class TestKnnJoinRing:
         dsq_5 <= 1088 makes all five globally correct."""
         assert 2 * 32 - 31 == 33 and 33 * 33 == 1089
 
+    def test_kernel_rejects_negative_custkey(self):
+        """The bottom-k key packs ``(dsq << 44) | custkey``: a negative
+        key would corrupt the order and collide with the -1 sentinel, so
+        building the kernel over one must fail loudly."""
+        from govgis_nov2023_slim_spatial_server_spark.catalog.spatial_mm import (
+            _ring_bottomk_map,
+        )
+
+        _ring_bottomk_map([(3, 4, [1, 7])])
+        with pytest.raises(AssertionError, match="negative custkey"):
+            _ring_bottomk_map([(3, 4, [1]), (10, 2, [-1])])
+
     def test_plan_shapes(self, spark):
         """r16 kernel shape: the whole per-point reduction (ring tier +
         full-scan fallback) is ONE MapInPandas over the spread point

@@ -7,7 +7,7 @@ from govgis_nov2023_slim_spatial_server_spark.functions.spatial import (
     bbox_contains_point,
     lonlat_to_mercator,
     make_box_wkb_udf,
-    make_point_intersects_udf,
+    make_points_in_polys_udf,
     make_reproject_udf,
     mercator_to_lonlat,
     parse_wkb_polygons,
@@ -77,7 +77,10 @@ def test_bbox_udf_and_prune(spark):
 def test_exact_intersects_udf(spark):
     rows = [(1, wkb_box(0, 0, 2, 2)), (2, wkb_box(5, 5, 9, 9)), (3, None)]
     df = spark.createDataFrame(rows, "id: long, geom_wkb: binary")
-    out = df.where(make_point_intersects_udf(6.0, 6.0)(F.col("geom_wkb")))
+    refine = make_points_in_polys_udf()(F.col("geom_wkb"), F.lit(6.0), F.lit(6.0))
+    got = {r["id"]: r["hit"] for r in df.select("id", refine.alias("hit")).collect()}
+    assert got == {1: False, 2: True, 3: False}  # NULL geometry refines False
+    out = df.where(refine)
     assert [r["id"] for r in out.collect()] == [2]
 
 

@@ -70,7 +70,7 @@ def main() -> None:
         np_actual = probes.count()
 
         t0 = time.perf_counter()
-        exact = similarity_join(probes, corpus, k=args.k, normalized=False)
+        exact = similarity_join(probes, corpus, k=args.k)
         exact_set = {(r["probe_id"], r["vec_id"]) for r in exact.collect()}
         t_exact = time.perf_counter() - t0
 
